@@ -7,7 +7,8 @@ Two workloads:
    (default /root/testdata/sf0.1) and forced with a noop write (full
    computation, no driver collect).
 
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the host's CPU count),
+SPARK_GRAFT_DRIVER_MEM (default: half of MemTotal, capped at 16g),
 SPARK_GRAFT_BENCH_ROWS (default 1,000,000 synthetic sequences).
 """
 
@@ -25,7 +26,8 @@ from hypertrace_ingester_spark.plans.pipeline import PipelineConfig, run_pipelin
 from hypertrace_ingester_spark.queries import REGISTRY, _load_extensions
 
 _load_extensions()
-from hypertrace_ingester_spark.session import get_spark
+from hypertrace_ingester_spark.session import (
+    default_driver_mem, default_parallelism, get_spark)
 
 # round-3 note: catalog consolidated to 50 entries (driver samples the
 # first 50); v_span_event_view / v_service_call_view / e_backend_classify
@@ -133,15 +135,12 @@ def host_probe(own_jvms: int = 0) -> dict:
 
 
 def main() -> None:
-    # bench-process heap default: 24 GB pinned (tests keep the lighter 16 GB
-    # session default). Round-4 A/B, alternating fresh JVMs under an
-    # (admittedly degraded) host window, 4 reps each × 2 rounds:
-    # 16g mins 13.05/13.67 s vs 24g mins 12.87/10.47 s — the larger pinned
-    # young gen (8 GB vs 5.3 GB) cuts GC frequency during the payload write,
-    # and each GC cycle costs DRAM bandwidth this box is short on.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # heap and cores come from the host (session defaults): the heap is
+    # pinned and committed up front, so a constant sized for a bigger host
+    # refuses to start the JVM on a smaller one
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", default_driver_mem())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     n_rows = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "1000000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 

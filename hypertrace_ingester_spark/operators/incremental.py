@@ -46,8 +46,8 @@ from . import dedup as dd
 INDEX_BUCKETS = 32
 
 # the single definition of the three index tables' (DDL, bucket cols) —
-# shared by load_index / remove_docs / sources.compaction.compact_index so
-# a schema or bucket-key change cannot drift between them (review find)
+# shared by load_index / remove_docs / compact_index so a schema or
+# bucket-key change cannot drift between them
 INDEX_SPECS = {
     "exact": ("text_hash string, doc_id string", ["text_hash"]),
     "bands": ("band_hash bigint, doc_id string", ["band_hash"]),
@@ -304,67 +304,60 @@ def remove_docs(
     """Right-to-be-forgotten maintenance for the dedup index: purge every
     index row belonging to ``doc_ids`` from all three tables — after a
     takedown the corpus must not only drop the documents
-    (``sources.compaction.delete_ids`` on the corpus files) but also stop
+    (``sources.snapshots.delete_ids`` on the corpus table) but also stop
     remembering their hashes, or tomorrow's delta would still dedup
     against deleted content and silently re-suppress a legitimate
     re-submission.
 
-    Layout-preserving: each table is re-read through its bucket-aligned
-    scan (one task = one whole bucket, ``autoBucketedScan`` forced off —
-    the ``compact_bucketed_table`` rule), anti-filtered against the
-    broadcast id list (a Filter never disturbs the scan's reported
-    partitioning), and rewritten with the IDENTICAL bucketBy spec — zero
-    Exchange — then rename-swapped (crash leaves the original). Row
-    counts in the manifest come from parquet footers, not count jobs.
+    Layout-preserving: each table goes through
+    ``bucketing.rewrite_bucketed`` with the anti-filter against the id
+    list as its transform (a Filter never disturbs the scan's reported
+    partitioning) — zero Exchange, rename-swapped (crash leaves the
+    original). Row counts in the manifest come from parquet footers, not
+    count jobs.
 
     Deletion requests are bounded, so ``doc_ids`` is a driver-held list
     (the ids are matched as strings — the index's storage type)."""
-    from pyspark.sql import functions as F
-
-    from ..sources import compaction as cpa
-
-    idx = load_index(spark, path, prefix=prefix)
-    meta = idx.get("_meta") or {}
-    n_buckets = meta.get("n_buckets", INDEX_BUCKETS)
     ids = [str(i) for i in doc_ids]
-    specs = INDEX_SPECS
-    out: dict = {"path": path, "tables": {}}
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev_auto = spark.conf.get(auto_key, "true")
-    spark.conf.set(auto_key, "false")
-    try:
-        for name, (ddl, cols) in specs.items():
-            table = f"{prefix}_{name}"
-            tpath = f"{path}/{name}"
-            before = _dir_rows(tpath)
-            src = bucketing.ensure_bucketed_table(
-                spark, table, tpath, ddl, cols, n_buckets
-            ).filter(
-                # three-valued NOT IN is NULL for NULL doc_ids — keep
-                # NULL-keyed rows explicitly (a takedown must never delete
-                # un-requested rows; matches delete_ids)
-                F.col("doc_id").isNull() | ~F.col("doc_id").isin(ids)
-            )
-            tmp_path = cpa._hidden_sibling(tpath, "remove-tmp")
-            tmp_table = f"{table}_remove_tmp"
-            if os.path.exists(tmp_path):
-                import shutil
 
-                shutil.rmtree(tmp_path)
-            bucketing.write_bucketed(
-                src, tmp_table, cols, n_buckets, mode="overwrite",
-                path=tmp_path,
-            )
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-            cpa._swap_dirs(tpath, tmp_path)
-            bucketing.ensure_bucketed_table(
-                spark, table, tpath, ddl, cols, n_buckets
-            )
-            out["tables"][name] = {
-                "rows_before": before,
-                "rows_after": _dir_rows(tpath),
-            }
-    finally:
-        spark.conf.set(auto_key, prev_auto)
+    def keep(df: DataFrame) -> DataFrame:
+        # three-valued NOT IN is NULL for NULL doc_ids — keep NULL-keyed
+        # rows explicitly (a takedown must never delete un-requested rows;
+        # matches snapshots.delete_ids)
+        return df.filter(F.col("doc_id").isNull() | ~F.col("doc_id").isin(ids))
+
+    out: dict = {"path": path, "tables": {}}
+    n_buckets = _index_buckets(spark, path, prefix)
+    for name, (ddl, cols) in INDEX_SPECS.items():
+        tpath = f"{path}/{name}"
+        before = _dir_rows(tpath)
+        bucketing.rewrite_bucketed(
+            spark, f"{prefix}_{name}", tpath, ddl, cols, n_buckets,
+            transform=keep,
+        )
+        out["tables"][name] = {
+            "rows_before": before,
+            "rows_after": _dir_rows(tpath),
+        }
     return out
+
+
+def compact_index(spark: SparkSession, path: str, prefix: str = "corpus_index") -> dict:
+    """Compact the three index tables after a run of daily appends — the
+    maintenance half of the daily-crawl flow: each bucket's append
+    fragments collapse to one file through ``bucketing.rewrite_bucketed``
+    (zero-Exchange). Geometry comes from the index's own persisted meta,
+    never the caller."""
+    n_buckets = _index_buckets(spark, path, prefix)
+    return {
+        name: bucketing.rewrite_bucketed(
+            spark, f"{prefix}_{name}", f"{path}/{name}", ddl, cols, n_buckets
+        )
+        for name, (ddl, cols) in INDEX_SPECS.items()
+    }
+
+
+def _index_buckets(spark: SparkSession, path: str, prefix: str) -> int:
+    """The bucket count the index was built with (its persisted meta)."""
+    meta = load_index(spark, path, prefix=prefix).get("_meta") or {}
+    return meta.get("n_buckets", INDEX_BUCKETS)

@@ -50,7 +50,7 @@ from ..operators import datacard as dc
 from ..operators import incremental as inc
 from ..operators import text as tx
 from ..operators import weburl as wu
-from ..sources import compaction as cpa
+from ..sources import bucketing
 from ..sources import prometheus as prom
 from ..sources import shards as sh
 
@@ -178,7 +178,7 @@ class CurationConfig:
     corpus_index_append: bool = False
     # maintenance trigger for the daily-append flow: after the append, if
     # any index table has fragmented past this many files, compact it back
-    # to one file per bucket (sources/compaction.py — zero-Exchange
+    # to one file per bucket (incremental.compact_index — zero-Exchange
     # rewrite). Threshold-gated so the common day is metadata-probe-only;
     # None disables.
     corpus_index_compact_files: int | None = None
@@ -672,11 +672,11 @@ def _curation_tail(
             mode="append")
         if cfg.corpus_index_compact_files:
             worst = max(
-                cpa.file_stats(f"{cfg.corpus_index_path}/{t}")["n_files"]
+                bucketing.file_stats(f"{cfg.corpus_index_path}/{t}")["n_files"]
                 for t in ("exact", "bands", "sigs")
             )
             if worst > cfg.corpus_index_compact_files:
-                manifest["index_compact"] = cpa.compact_index(
+                manifest["index_compact"] = inc.compact_index(
                     spark, cfg.corpus_index_path,
                     prefix=cfg.corpus_index_prefix)
 

@@ -18,15 +18,18 @@ user of the reference's always-on ingester would run:
 Exactly-once notes: ``foreachBatch`` + parquet append gives at-least-once
 on retries (the reference's Kafka Streams default is also ALOS). With
 ``cfg.snapshot_routed=True`` the routed sink instead commits each batch to
-a snapshot-versioned table with an idempotent ``batch_id`` gate
+a snapshot-versioned table with an idempotent ``(app_id, batch_id)`` gate
 (``sources/snapshots.commit_stream_batch``) — a retry replay no-ops, which
 is exactly-once; the same hook swaps to Iceberg ``writeTo(...).append()``
 (whose idempotent commits use the identical recipe) when the runtime jar
-exists.
+exists. ``app_id`` is the query id the checkpoint persists: restarts of
+one checkpoint share it, a fresh checkpoint gets a new one and its batch
+ids (restarting at 0) land instead of being taken for replays.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,7 +82,8 @@ def process_batch(
         from ..sources import snapshots as snap
 
         snap.commit_stream_batch(
-            routed, os.path.join(cfg.out_dir, "routed_snap"), batch_id
+            routed, os.path.join(cfg.out_dir, "routed_snap"),
+            app_id=_checkpoint_query_id(cfg), batch_id=batch_id,
         )
     else:
         route_ops.fan_out(
@@ -89,6 +93,18 @@ def process_batch(
     agg_ops.sink_metrics(routed, cfg.metric_window_ms).write.mode("overwrite").parquet(
         os.path.join(cfg.out_dir, "metrics", f"batch_id={batch_id}")
     )
+
+
+def _checkpoint_dir(cfg: PipelineConfig) -> str:
+    return os.path.join(cfg.out_dir, "_stream_checkpoint")
+
+
+def _checkpoint_query_id(cfg: PipelineConfig) -> str:
+    """The StreamingQuery id stored in the checkpoint's ``metadata`` file
+    (written when the query first starts): the same across restarts of
+    one checkpoint, new for a fresh checkpoint."""
+    with open(os.path.join(_checkpoint_dir(cfg), "metadata")) as fh:
+        return json.loads(fh.readline())["id"]
 
 
 def run_streaming_pipeline(
@@ -118,7 +134,7 @@ def run_streaming_pipeline(
 
     writer = (
         stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(cfg.out_dir, "_stream_checkpoint"))
+        .option("checkpointLocation", _checkpoint_dir(cfg))
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)

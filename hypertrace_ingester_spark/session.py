@@ -19,6 +19,23 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_mem() -> str:
+    """Default heap: half of the host's MemTotal (``/proc/meminfo``),
+    capped at 16g. The heap is pinned (Xms=Xmx, see _driver_java_opts), so
+    it is committed up front; a constant sized for a bigger host gets the
+    JVM OOM-killed on a smaller one. Hosts without ``/proc/meminfo`` get
+    the cap."""
+    cap_mb = 16 * 1024
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{min(int(line.split()[1]) // 2048, cap_mb)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def _parse_mem_mb(mem: str) -> int:
     """Resolve a Spark-style memory string ('16g', '512m', '16384m',
     '2048k', bare MiB) to whole megabytes. A suffix-less number is MiB —
@@ -62,9 +79,9 @@ def _driver_java_opts(driver_mem: str) -> str:
     # committed heap across jobs and every regrowth re-faults pages — one
     # measured series ran 85/176/33/19 s for IDENTICAL back-to-back jobs.
     # Pinning Xms=Xmx faults each page once and never releases it: the same
-    # job series stabilizes to ±12%. The heap itself is sized modest (16 GB
-    # default, env-overridable) to keep the fault surface small; at bench
-    # scale the pipeline never spills at 16 GB.
+    # job series stabilizes to ±12%. The heap itself is sized modest (half
+    # of RAM up to 16 GB, env-overridable) to keep the fault surface small;
+    # at bench scale the pipeline never spills at 16 GB.
     return f"-XX:+UseParallelGC -Xmn{young_mb}m -Xms{heap_mb}m"
 
 
@@ -86,7 +103,8 @@ def get_spark(
     # effective driver memory: a caller override (extra_conf) wins over the
     # env knob; the heap-pin java opts MUST derive from the same value
     driver_mem = (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_mem()),
     )
 
     builder = (

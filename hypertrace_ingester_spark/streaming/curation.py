@@ -24,7 +24,7 @@ matches two identically), and the replayed docs were already dropped as
 exact dups of their own first append when re-presented.
 
 Per-micro-batch index appends fragment the index files (one file set
-per batch per bucket); run ``sources.compaction.compact_index`` on the
+per batch per bucket); run ``operators.incremental.compact_index`` on the
 maintenance schedule — or let a nightly batch `run_curation` with
 ``corpus_index_compact_files`` set do it — to fold them back to one file
 per bucket without touching probe semantics (zero-Exchange rewrite,

@@ -1,13 +1,17 @@
-"""Small-file compaction (sources/compaction.py).
+"""Small-file compaction.
 
-- flat + hive-partitioned dirs: appended fragments collapse to the size
-  target, rows/values/partition columns byte-identical, second run is a
-  no-op (idempotent nightly maintenance);
-- bucketed tables: after N index appends each bucket holds N×tasks files;
-  compaction lands EXACTLY one file per non-empty bucket with no Exchange
-  in the rewrite read (bucket-aligned scan: one task == one bucket), the
-  catalog layout survives, and downstream zero-Exchange plans + the
-  incremental-dedup probe behave identically before/after.
+- snapshot tables (sources/snapshots.compact): appended fragments
+  collapse to the size target as a NEW snapshot, rows/values identical,
+  the old layout still time-travels, and a second run is a no-op
+  (idempotent nightly maintenance);
+- bucketed tables (sources/bucketing.rewrite_bucketed via
+  incremental.compact_index): after N index appends each bucket holds
+  N×tasks files; compaction lands EXACTLY one file per non-empty bucket
+  with no Exchange in the rewrite read (bucket-aligned scan: one task ==
+  one bucket), the catalog layout survives, and downstream zero-Exchange
+  plans + the incremental-dedup probe behave identically before/after;
+- the rename-swap both bucketed rewrites share survives a crash between
+  its two renames.
 """
 
 import os
@@ -17,7 +21,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from hypertrace_ingester_spark.operators import incremental as inc
-from hypertrace_ingester_spark.sources import bucketing, compaction
+from hypertrace_ingester_spark.sources import bucketing
+from hypertrace_ingester_spark.sources import snapshots as sn
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -27,46 +32,27 @@ pytestmark = pytest.mark.skipif(
 
 
 def test_compact_flat_dir(spark, tmp_path):
-    path = str(tmp_path / "flat")
+    t = str(tmp_path / "flat")
     df = spark.range(0, 3000).withColumn("v", F.col("id") * 2)
     for _ in range(3):
-        df.repartition(16).write.mode("append").parquet(path)
-    before = compaction.file_stats(path)
-    assert before["n_files"] == 48
+        sn.commit(df.repartition(16), t)
+    pre = sn.snapshots(t)[-1]
+    assert len(pre.files) == 48
 
-    manifest = compaction.compact_dir(spark, path, target_mb=256)
-    assert manifest["leaves_compacted"] == 1
-    assert manifest["files_after"] < manifest["files_before"]
-    assert compaction.file_stats(path)["n_files"] == 1  # tiny table → 1 file
+    s = sn.compact(spark, t, target_file_mb=256)
+    assert (s.operation, s.parent, s.rows) == ("compact", pre.version, 9000)
+    assert len(s.files) == 1  # tiny table → 1 file
+    assert not set(s.files) & set(pre.files)
 
-    back = spark.read.parquet(path)
+    back = sn.read_snapshot(spark, t)
     assert back.count() == 9000
     assert back.agg(F.sum("v")).first()[0] == 3 * 2 * sum(range(3000))
+    # the fragmented layout still time-travels until expiry
+    assert sn.read_snapshot(spark, t, version=pre.version).count() == 9000
 
-    # idempotent: already-compact leaves are skipped entirely
-    again = compaction.compact_dir(spark, path, target_mb=256)
-    assert again["leaves_compacted"] == 0
-    assert again["files_after"] == again["files_before"]
-
-
-def test_compact_partitioned_dir(spark, tmp_path):
-    path = str(tmp_path / "parted")
-    df = spark.range(0, 2000).withColumn(
-        "sink", F.when(F.col("id") % 2 == 0, "alpha").otherwise("beta")
-    )
-    for _ in range(3):
-        df.repartition(8).write.mode("append").partitionBy("sink").parquet(path)
-    before = compaction.file_stats(path)
-    assert before["n_files"] == 48  # 8 tasks × 2 sinks × 3 appends
-
-    manifest = compaction.compact_dir(spark, path, target_mb=256)
-    assert manifest["leaves_compacted"] == 2
-    assert compaction.file_stats(path)["n_files"] == 2  # one per partition
-
-    back = spark.read.parquet(path)
-    got = {r["sink"]: r["n"] for r in back.groupBy("sink").agg(
-        F.count(F.lit(1)).alias("n")).collect()}
-    assert got == {"alpha": 3000, "beta": 3000}  # partition col survives
+    # idempotent: an already-compact table is a metadata no-op
+    assert sn.compact(spark, t, target_file_mb=256) is None
+    assert sn.current_version(t) == s.version
 
 
 @pytest.fixture(scope="module")
@@ -94,16 +80,16 @@ def test_compact_bucketed_index(spark, appended_index):
     idx = inc.load_index(spark, path, prefix=prefix)
     rows_before = {t: idx[t].count() for t in ("exact", "bands", "sigs")}
     files_before = {
-        t: compaction.file_stats(f"{path}/{t}")["n_files"]
+        t: bucketing.file_stats(f"{path}/{t}")["n_files"]
         for t in ("exact", "bands", "sigs")
     }
     # three appends of an 8-partition frame fragment every bucket
     assert all(n > 8 for n in files_before.values())
 
-    manifest = compaction.compact_index(spark, path, prefix=prefix)
+    manifest = inc.compact_index(spark, path, prefix=prefix)
 
     for t in ("exact", "bands", "sigs"):
-        stats = compaction.file_stats(f"{path}/{t}")
+        stats = bucketing.file_stats(f"{path}/{t}")
         assert stats["n_files"] <= 8, t  # exactly one file per non-empty bucket
         assert stats["n_files"] < files_before[t], t
         assert manifest[t]["files_after"] == stats["n_files"]
@@ -148,3 +134,36 @@ def test_probe_behaves_identically_after_compaction(spark, appended_index):
     assert manifest["exact_dups_vs_corpus"] == 1
     assert manifest["kept"] == 1
     assert [r["doc_id"] for r in kept.select("doc_id").collect()] == [990001]
+
+
+def _tree(path):
+    return {f: open(os.path.join(path, f)).read() for f in os.listdir(path)}
+
+
+def test_swap_dirs_restores_interrupted_swap(tmp_path):
+    """A crash between the swap's two renames leaves ``path`` missing and
+    the only copy at the hidden old sibling. The next swap must restore
+    it before anything else — never delete it while ``path`` is absent —
+    so even a swap whose new data is missing loses nothing."""
+    path = str(tmp_path / "tbl")
+    old = bucketing._hidden_sibling(path, "compact-old")
+    os.makedirs(old)
+    with open(os.path.join(old, "part-0"), "w") as fh:
+        fh.write("original")
+
+    # a swap that fails again (its new data is missing) deletes nothing:
+    # the original is still the one copy, restorable into place
+    with pytest.raises(FileNotFoundError):
+        bucketing._swap_dirs(path, str(tmp_path / "missing"))
+    bucketing._restore_swap(path)
+    assert _tree(path) == {"part-0": "original"}
+
+    # crashed mid-swap again, then a complete swap: the new data wins
+    os.rename(path, old)
+    new = str(tmp_path / "new")
+    os.makedirs(new)
+    with open(os.path.join(new, "part-0"), "w") as fh:
+        fh.write("rewritten")
+    bucketing._swap_dirs(path, new)
+    assert _tree(path) == {"part-0": "rewritten"}
+    assert not os.path.exists(old) and not os.path.exists(new)

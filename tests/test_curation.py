@@ -294,11 +294,11 @@ def test_corpus_index_stage_daily_crawl_flow(spark, tmp_path):
 
         # maintenance fired and collapsed the append fragments: at most one
         # file per bucket per table, and the manifest records the rewrite
-        from hypertrace_ingester_spark.sources import compaction as cpa
+        from hypertrace_ingester_spark.sources import bucketing
 
         assert "index_compact" in man2
         for t in ("exact", "bands", "sigs"):
-            stats = cpa.file_stats(f"{idx}/{t}")
+            stats = bucketing.file_stats(f"{idx}/{t}")
             assert stats["n_files"] <= inc.INDEX_BUCKETS, t
             assert man2["index_compact"][t]["files_after"] == stats["n_files"]
     finally:

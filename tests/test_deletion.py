@@ -1,9 +1,11 @@
-"""Targeted deletion — delete_ids (footer-pruned file-level rewrite) and
-remove_docs (index purge). The write-amplification claims are asserted
-directly: on a clustered table a narrow delete rewrites ONE file and the
-other files' bytes are untouched; on a scattered table the same delete
-rewrites many. The index purge must make a deleted doc's re-submission
-survive the incremental probe (the forget-me contract)."""
+"""Targeted deletion — snapshots.delete_ids (footer-pruned copy-on-write
+DELETE committed as a new snapshot) and incremental.remove_docs (index
+purge). The write-amplification claims are asserted directly: on a
+clustered table a narrow delete rewrites ONE file and every other file
+is carried into the new manifest under the same relative path with
+unchanged bytes; on a scattered table the same delete rewrites many. The
+index purge must make a deleted doc's re-submission survive the
+incremental probe (the forget-me contract)."""
 
 import hashlib
 import os
@@ -13,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hypertrace_ingester_spark.operators import incremental as inc
-from hypertrace_ingester_spark.sources import compaction as cpa
+from hypertrace_ingester_spark.sources import snapshots as sn
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -22,45 +24,47 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def _file_hashes(path: str) -> dict:
-    out = {}
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                continue
-            p = os.path.join(root, f)
-            out[p] = hashlib.md5(open(p, "rb").read()).hexdigest()
-    return out
+def _md5(path: str, rel: str) -> str:
+    with open(os.path.join(path, rel), "rb") as fh:
+        return hashlib.md5(fh.read()).hexdigest()
+
+
+def _docs_table(spark, tmp_path, name, n_files) -> str:
+    path = str(tmp_path / name)
+    sn.commit(
+        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+        .repartition(n_files, "text"),
+        path,
+    )
+    return path
 
 
 def test_delete_ids_clustered_rewrites_one_file(spark, tmp_path):
-    path = str(tmp_path / "docs_clustered")
-    (
-        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-        .repartition(12, "text")
-        .write.mode("overwrite").parquet(path)
-    )
-    cpa.cluster_dir(spark, path, ["doc_id"], n_files=6)
-    before_pdf = spark.read.parquet(path).toPandas()
-    ranges = cpa.clustering_stats(path, "doc_id")["ranges"]
+    path = _docs_table(spark, tmp_path, "docs_clustered", 12)
+    sn.cluster(spark, path, ["doc_id"], n_files=6)
+    pre = sn.snapshots(path)[-1]
+    before_pdf = sn.read_snapshot(spark, path).toPandas()
+    ranges = sn.clustering_stats(path, "doc_id")["ranges"]
     lo, hi = ranges[3]
     targets = sorted(before_pdf[
         (before_pdf["doc_id"] >= lo) & (before_pdf["doc_id"] <= hi)
     ]["doc_id"])[:3]
     assert len(targets) == 3
-    before_hashes = _file_hashes(path)
+    before_md5 = {f: _md5(path, f) for f in pre.files}
 
-    man = cpa.delete_ids(spark, path, "doc_id", targets)
+    man = sn.delete_ids(spark, path, "doc_id", targets)
     assert man["files_rewritten"] == 1          # clustering payoff
     assert man["files_pruned"] == 5
     assert man["rows_deleted"] == 3
 
-    after_hashes = _file_hashes(path)
-    untouched = set(before_hashes) & set(after_hashes)
-    changed = [p for p in untouched if before_hashes[p] != after_hashes[p]]
-    assert len(changed) == 1                    # only the hit file rewrote
-    after_pdf = spark.read.parquet(path).toPandas()
+    # the 5 untouched files ride into the new manifest by reference: same
+    # relative path, same bytes; only the hit file was replaced
+    post = sn.snapshots(path)[-1]
+    assert (post.version, post.operation) == (man["version"], "delete")
+    carried = set(pre.files) & set(post.files)
+    assert len(carried) == 5 and len(post.files) == 6
+    assert all(_md5(path, f) == before_md5[f] for f in carried)
+    after_pdf = sn.read_snapshot(spark, path).toPandas()
     want = before_pdf[~before_pdf["doc_id"].isin(targets)]
     pd.testing.assert_frame_equal(
         after_pdf.sort_values("doc_id", ignore_index=True)[
@@ -68,42 +72,39 @@ def test_delete_ids_clustered_rewrites_one_file(spark, tmp_path):
         want.sort_values("doc_id", ignore_index=True)[
             sorted(want.columns)],
     )
+    # time travel still sees the deleted rows until expiry
+    assert sn.read_snapshot(spark, path, version=pre.version).count() \
+        == len(before_pdf)
 
 
 def test_delete_ids_scattered_rewrites_many(spark, tmp_path):
-    path = str(tmp_path / "docs_scatter")
-    (
-        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-        .repartition(6, "text")
-        .write.mode("overwrite").parquet(path)
-    )
-    pdf = spark.read.parquet(path).toPandas()
+    path = _docs_table(spark, tmp_path, "docs_scatter", 6)
+    pdf = sn.read_snapshot(spark, path).toPandas()
     targets = sorted(pdf["doc_id"])[10:13]
-    man = cpa.delete_ids(spark, path, "doc_id", targets)
+    man = sn.delete_ids(spark, path, "doc_id", targets)
     # scattered files all span ~the full id range: no pruning possible
     assert man["files_rewritten"] > 1
     assert man["rows_deleted"] == 3
-    left = spark.read.parquet(path).toPandas()
+    left = sn.read_snapshot(spark, path).toPandas()
     assert len(left) == len(pdf) - 3
     assert not set(targets) & set(left["doc_id"])
 
 
 def test_delete_ids_removes_emptied_file(spark, tmp_path):
     path = str(tmp_path / "two_files")
-    df = spark.createDataFrame(
-        [(i, f"t{i}") for i in range(10)], "doc_id long, text string")
-    df.write.mode("overwrite").parquet(path)
-    cpa.cluster_dir(spark, path, ["doc_id"], n_files=2)
-    ranges = cpa.clustering_stats(path, "doc_id")["ranges"]
+    sn.commit(spark.createDataFrame(
+        [(i, f"t{i}") for i in range(10)], "doc_id long, text string"), path)
+    sn.cluster(spark, path, ["doc_id"], n_files=2)
+    ranges = sn.clustering_stats(path, "doc_id")["ranges"]
     lo, hi = ranges[0]
     victims = list(range(int(lo), int(hi) + 1))
-    man = cpa.delete_ids(spark, path, "doc_id", victims)
+    man = sn.delete_ids(spark, path, "doc_id", victims)
     assert man["rows_deleted"] == len(victims)
-    left = spark.read.parquet(path).toPandas()
+    left = sn.read_snapshot(spark, path).toPandas()
     assert sorted(left["doc_id"]) == [
         i for i in range(10) if i not in victims]
     # the emptied file is gone, not left as a zero-row husk
-    assert cpa.file_stats(path)["n_files"] == 1
+    assert len(sn.snapshots(path)[-1].files) == 1
 
 
 def test_remove_docs_purges_index_and_forgets(spark, tmp_path):
@@ -152,11 +153,11 @@ def test_delete_ids_never_touches_null_id_rows(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a"), (None, "keep me"), (2, "b"), (None, "me too"), (3, "c")],
         "doc_id long, text string")
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-    man = cpa.delete_ids(spark, path, "doc_id", [2])
+    sn.commit(df.coalesce(1), path)
+    man = sn.delete_ids(spark, path, "doc_id", [2])
     # NOT-IN is three-valued: the anti-filter must keep NULL ids explicitly
     assert man["rows_deleted"] == 1
-    left = spark.read.parquet(path).toPandas()
+    left = sn.read_snapshot(spark, path).toPandas()
     assert len(left) == 4
     assert left["doc_id"].isna().sum() == 2
     assert set(left["text"]) == {"a", "keep me", "me too", "c"}
@@ -164,10 +165,11 @@ def test_delete_ids_never_touches_null_id_rows(spark, tmp_path):
 
 def test_delete_ids_raises_on_missing_column(spark, tmp_path):
     path = str(tmp_path / "no_such_col")
-    spark.createDataFrame([(1, "x")], "doc_id long, text string") \
-        .write.mode("overwrite").parquet(path)
+    sn.commit(spark.createDataFrame([(1, "x")], "doc_id long, text string"),
+              path)
     with pytest.raises(ValueError, match="no data file"):
-        cpa.delete_ids(spark, path, "document_id", [1])
+        sn.delete_ids(spark, path, "document_id", [1])
+    assert sn.current_version(path) == 1
 
 
 def test_remove_docs_never_touches_null_id_rows(spark, tmp_path):

@@ -5,6 +5,7 @@ data-file garbage collection."""
 
 import json
 import os
+import shutil
 import time
 
 import pytest
@@ -121,18 +122,25 @@ def test_expire_snapshots_gc(spark, tmp_path):
 
 
 def test_commit_stream_batch_is_idempotent(spark, tmp_path):
-    """The exactly-once gate: a retry replay (same batch_id) no-ops; a
-    later batch id lands; an OLDER id (impossible in practice, but the
-    monotone contract) also no-ops."""
+    """The exactly-once gate: a retry replay (same app, same batch_id)
+    no-ops; a later batch id lands; an OLDER id (impossible in practice,
+    but the monotone contract) also no-ops; another app's ids are gated
+    on that app's own sequence."""
     t = str(tmp_path / "tbl")
-    s = sn.commit_stream_batch(_df(spark, 0, 4), t, batch_id=0)
-    assert s is not None and s.batch_id == 0
-    assert sn.commit_stream_batch(_df(spark, 0, 4), t, batch_id=0) is None
+    s = sn.commit_stream_batch(_df(spark, 0, 4), t, app_id="a", batch_id=0)
+    assert s is not None and (s.app_id, s.batch_id) == ("a", 0)
+    assert sn.commit_stream_batch(
+        _df(spark, 0, 4), t, app_id="a", batch_id=0) is None
     assert sn.read_snapshot(spark, t).count() == 4       # no double-append
-    s2 = sn.commit_stream_batch(_df(spark, 4, 6), t, batch_id=1)
+    s2 = sn.commit_stream_batch(_df(spark, 4, 6), t, app_id="a", batch_id=1)
     assert s2.batch_id == 1
-    assert sn.commit_stream_batch(_df(spark, 9, 10), t, batch_id=0) is None
+    assert sn.commit_stream_batch(
+        _df(spark, 9, 10), t, app_id="a", batch_id=0) is None
     assert sn.read_snapshot(spark, t).count() == 6
+    # a new stream (fresh checkpoint) restarts at batch 0 and still lands
+    s3 = sn.commit_stream_batch(_df(spark, 20, 21), t, app_id="b", batch_id=0)
+    assert s3 is not None and s3.batch_seqs == {"a": 1, "b": 0}
+    assert sn.read_snapshot(spark, t).count() == 7
 
 
 def test_streaming_pipeline_snapshot_sink_exactly_once(spark, tmp_path):
@@ -184,6 +192,78 @@ def test_streaming_pipeline_snapshot_sink_exactly_once(spark, tmp_path):
                   datagen.route_rules_dim(spark))
     assert sn.read_snapshot(spark, table).count() == before
     assert len(sn.snapshots(table)) == len(hist)
+
+
+def test_fresh_checkpoint_restart_lands_every_row(spark, tmp_path):
+    """The exactly-once key is (app_id, batch_id), with app_id the query id
+    the checkpoint persists: restarting against an existing routed_snap
+    with a NEW checkpoint (batch ids back at 0) lands every row instead of
+    no-opping until the ids pass the old sequence; a replay under the
+    same checkpoint still no-ops."""
+    from hypertrace_ingester_spark import datagen
+    from hypertrace_ingester_spark.operators import enrich as enrich_ops
+    from hypertrace_ingester_spark.plans.pipeline import PipelineConfig
+    from hypertrace_ingester_spark.plans.streaming_pipeline import (
+        process_batch, run_streaming_pipeline)
+
+    seqs = datagen.generate_sequences(spark, 900)
+    in_dir = str(tmp_path / "seqs")
+    seqs.repartition(3).write.parquet(in_dir)
+    out = str(tmp_path / "out")
+    cfg = PipelineConfig(out_dir=out, snapshot_routed=True)
+    table = out + "/routed_snap"
+
+    def run():
+        stream = (spark.readStream.schema(seqs.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
+        run_streaming_pipeline(spark, stream, cfg).awaitTermination(180)
+        return sn.read_snapshot(spark, table).count()
+
+    first = run()
+    assert first > 0
+    first_seqs = sn.snapshots(table)[-1].batch_seqs
+    assert len(first_seqs) == 1 and max(first_seqs.values()) >= 1
+    shutil.rmtree(out + "/_stream_checkpoint")   # fresh checkpoint
+    assert run() == 2 * first                     # every file re-read lands
+    last = sn.snapshots(table)[-1]
+    assert len(last.batch_seqs) == 2
+
+    # replay under the (new) checkpoint: no-op
+    ctx = enrich_ops.EnrichContext(
+        endpoints=datagen.endpoints_dim(spark),
+        services=datagen.services_dim(spark),
+        status_codes=datagen.status_codes_dim(spark),
+    )
+    process_batch(spark.read.parquet(in_dir), 0, cfg, ctx,
+                  datagen.route_rules_dim(spark))
+    assert sn.current_version(table) == last.version
+    assert sn.read_snapshot(spark, table).count() == 2 * first
+
+
+def test_merge_and_delete_prune_on_top_level_key_not_struct_leaf(
+        spark, tmp_path):
+    """Schema {id, s: struct<id>, v}: both parquet leaves are NAMED 'id'.
+    Pruning must use the top-level column's footer range — with the
+    struct leaf's range a file holding the key looks untouched, and merge
+    leaves a stale duplicate / delete misses the row."""
+    t = str(tmp_path / "shadow")
+    schema = "id long, s struct<id: long>, v string"
+    for lo in (0, 1000):
+        # s.id ranges are disjoint from the top-level id ranges
+        rows = [(i, (i + 100_000,), "old") for i in range(lo, lo + 10)]
+        sn.commit(spark.createDataFrame(rows, schema).coalesce(1), t)
+    sn.merge_upsert(spark, spark.createDataFrame(
+        [(5, (7,), "new")], schema), t, "id")
+    got = [(r["id"], r["v"]) for r in
+           sn.read_snapshot(spark, t).where("id = 5").collect()]
+    assert got == [(5, "new")]
+    assert sn.read_snapshot(spark, t).count() == 20
+
+    man = sn.delete_ids(spark, t, "id", [3, 1004])
+    assert man["rows_deleted"] == 2
+    left = sorted(r["id"] for r in sn.read_snapshot(spark, t).collect())
+    assert left == [i for i in list(range(10)) + list(range(1000, 1010))
+                    if i not in (3, 1004)]
 
 
 def test_schema_enforcement_and_empty_reads(spark, tmp_path):
@@ -270,45 +350,58 @@ def test_merge_upsert_copy_on_write(spark, tmp_path):
 
 def test_orphan_data_files_swept_after_grace(spark, tmp_path):
     """A crashed/conflict-losing commit leaves staged data files that no
-    manifest references; the expiry orphan sweep removes them past the
-    grace age and never touches referenced files or young orphans."""
+    manifest references, its ``_stage-*`` dir and possibly a temp
+    manifest; the expiry orphan sweep removes all three past the grace
+    age and never touches referenced files or young leftovers."""
     t = str(tmp_path / "tbl")
     sn.commit(_df(spark, 0, 4), t)
     orphan = os.path.join(t, "data", "c999999-dead0000-00000.parquet")
-    _df(spark, 90, 92).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "o"))
-    src = [f for f in os.listdir(str(tmp_path / "o"))
-           if f.endswith(".parquet")][0]
-    os.rename(os.path.join(str(tmp_path / "o"), src), orphan)
-    # young orphan survives a guarded sweep
+    stage = os.path.join(t, "_stage-dead0000")
+    _df(spark, 90, 92).coalesce(1).write.mode("overwrite").parquet(stage)
+    src = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
+    shutil.copy(os.path.join(stage, src), orphan)
+    tmp_manifest = os.path.join(t, "_snapshots", ".tmp-dead0000")
+    with open(tmp_manifest, "w") as fh:
+        fh.write("{")
+    leftovers = (orphan, stage, tmp_manifest)
+    # young leftovers survive a guarded sweep
     out = sn.expire_snapshots(t, keep_last=5, orphan_grace_sec=3600)
-    assert out["orphans_deleted"] == 0 and os.path.exists(orphan)
-    # past the grace it is swept; the table still reads identically
+    assert out["orphans_deleted"] == 0
+    assert all(os.path.exists(p) for p in leftovers)
+    # past the grace they are swept; the table still reads identically
     out = sn.expire_snapshots(t, keep_last=5, orphan_grace_sec=0)
-    assert out["orphans_deleted"] == 1 and not os.path.exists(orphan)
+    assert out["orphans_deleted"] == 3
+    assert not any(os.path.exists(p) for p in leftovers)
     assert sn.read_snapshot(spark, t).count() == 4
 
 
 def test_batch_seq_survives_expiry_and_maintenance(spark, tmp_path):
     """The exactly-once gate must hold after maintenance commits and
     snapshot expiry drop every batch_id-bearing manifest (review find:
-    a history-scan gate was voided here). batch_seq rides every
+    a history-scan gate was voided here). batch_seqs ride every
     manifest."""
     t = str(tmp_path / "tbl")
-    assert sn.commit_stream_batch(_df(spark, 0, 3), t, batch_id=0) is not None
-    assert sn.commit_stream_batch(_df(spark, 3, 5), t, batch_id=1) is not None
-    # maintenance: a merge and a rollback, both batch_id=None
+    assert sn.commit_stream_batch(
+        _df(spark, 0, 3), t, app_id="a", batch_id=0) is not None
+    assert sn.commit_stream_batch(
+        _df(spark, 3, 5), t, app_id="a", batch_id=1) is not None
+    # maintenance: merge, delete, cluster and rollback, all batch_id=None
     sn.merge_upsert(spark, _df(spark, 4, 6), t, "id")
+    sn.delete_ids(spark, t, "id", [0])
+    sn.cluster(spark, t, ["id"], n_files=2)
     sn.rollback(t, sn.current_version(t) - 1)
+    assert sn.snapshots(t)[-1].batch_seqs == {"a": 1}
     # expire everything but the tail: all batch-bearing manifests gone
     sn.expire_snapshots(t, keep_last=2, orphan_grace_sec=3600)
     assert all(s.batch_id is None for s in sn.snapshots(t))
     # the replay gate still holds
     n_before = sn.read_snapshot(spark, t).count()
-    assert sn.commit_stream_batch(_df(spark, 3, 5), t, batch_id=1) is None
+    assert sn.commit_stream_batch(
+        _df(spark, 3, 5), t, app_id="a", batch_id=1) is None
     assert sn.read_snapshot(spark, t).count() == n_before
     # and a genuinely new batch lands
-    assert sn.commit_stream_batch(_df(spark, 50, 51), t, batch_id=2) is not None
+    assert sn.commit_stream_batch(
+        _df(spark, 50, 51), t, app_id="a", batch_id=2) is not None
 
 
 def test_merge_rejects_duplicate_update_keys(spark, tmp_path):
@@ -372,7 +465,8 @@ def test_compact_rewrites_layout_not_content(spark, tmp_path):
     t = str(tmp_path / "tbl")
     for b in range(5):
         sn.commit_stream_batch(
-            _df(spark, b * 3, b * 3 + 3).repartition(2), t, batch_id=b)
+            _df(spark, b * 3, b * 3 + 3).repartition(2), t,
+            app_id="a", batch_id=b)
     pre = sn.snapshots(t)[-1]
     assert len(pre.files) >= 10
     s = sn.compact(spark, t)
@@ -383,7 +477,8 @@ def test_compact_rewrites_layout_not_content(spark, tmp_path):
     assert got == list(range(15))
     # old layout still time-travels; gate still holds; second run no-ops
     assert sn.read_snapshot(spark, t, version=pre.version).count() == 15
-    assert sn.commit_stream_batch(_df(spark, 0, 3), t, batch_id=4) is None
+    assert sn.commit_stream_batch(
+        _df(spark, 0, 3), t, app_id="a", batch_id=4) is None
     assert sn.compact(spark, t) is None
 
 
